@@ -95,13 +95,20 @@ HEADLINE_ORDER = [
 ]
 
 
+def default_driver_mem(ram_bytes: int) -> str:
+    """An eighth of host RAM, within [1, 4] GiB: the heap is pre-touched
+    at start-up (see build_spark), so it must fit beside the workers."""
+    return f"{max(1024, min(4096, ram_bytes // 8 // 2**20))}m"
+
+
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
 
     # shuffle partitions sized to cores (what a real cluster does when it
     # grows); AQE splits skewed / coalesces tiny partitions at runtime.
     shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", str(cpus)))
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     # Fixed pre-touched heap: measured on this sandbox, G1 growing the
     # heap under 32 concurrent tasks stalls the whole JVM for tens of
     # seconds (one 30M-row hash pass: 83s during growth, 1.3s after).

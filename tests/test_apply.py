@@ -41,6 +41,7 @@ def test_extractor_deterministic_and_correct():
             b" <b>world</b> &#8364;</p></body></html>",
             None,
             b"plain text no tags",
+            b"<p>a &#55296; b &#57343;</p>",  # surrogates cannot be encoded
         ]
     )
     out1 = extract_text_series(html)
@@ -49,6 +50,23 @@ def test_extractor_deterministic_and_correct():
     assert out1[0] == "T Hello & world €"
     assert out1[1] is None
     assert out1[2] == "plain text no tags"
+    assert out1[3] == "a \ufffd b \ufffd"
+
+
+def test_apply_batch_with_surrogate_reference_applies(spark, tmp_table_root):
+    """A page whose numeric reference names a surrogate code point is
+    text like any other, not a poison pill that fails its batch."""
+    t = mk_table(tmp_table_root)
+    batch = spark.createDataFrame(
+        [(1, "I", "https://a/1", "2024-01-01 00:00:00", bytearray(b"<p>a &#55296; b</p>"), "en"),
+         (2, "I", "https://a/2", "2024-01-01 00:00:00", bytearray(b"<p>ok</p>"), "en")],
+        "lsn long, op string, url string, warc_ts string, html binary, lang string",
+    )
+    m = apply_batch(t, batch, batch_id=0)
+    m.check_invariant()
+    assert m.rows_merged_in == 2 and m.rows_quarantined == 0
+    got = {r["url"]: r["text"] for r in t.read(spark).collect()}
+    assert got == {"https://a/1": "a \ufffd b", "https://a/2": "ok"}
 
 
 def test_last_lsn_dedup_salted_equals_unsalted(spark):

@@ -12,11 +12,14 @@ import json
 import os
 import re
 
+import pytest
+
 from yadamu___yet_another_data_migration_utility_spark.plans import (
     GATE_HISTORY,
     ORACLES,
     QUERIES,
     _GATE_PRIORITY,
+    _load_gate_history,
 )
 from yadamu___yet_another_data_migration_utility_spark.plans.gate_history import (
     rebuild,
@@ -96,6 +99,24 @@ def test_new_queries_front_load():
         list(QUERIES) + [probe],
         key=lambda q: (GATE_HISTORY.get(q, 0), q),
     )
-    first_green = next(i for i, q in enumerate(order) if GATE_HISTORY.get(q, 0) > 0)
-    assert order.index(probe) < first_green
+    green = [i for i, q in enumerate(order) if GATE_HISTORY.get(q, 0) > 0]
+    assert green, "no green row in gate_history.json"
+    assert order.index(probe) < green[0]
     assert plans is not None
+
+
+@pytest.mark.parametrize("content", [
+    None,                 # missing
+    "{\"a\": 3",          # not JSON
+    "[3]",                # not an object
+    '{"a": [3]}',         # int() of this was an uncaught TypeError
+    '{"a": "3"}',
+    '{"a": 3.5}',
+    '{"a": true}',
+])
+def test_gate_history_fails_loudly(tmp_path, content):
+    path = tmp_path / "gate_history.json"
+    if content is not None:
+        path.write_text(content, encoding="utf-8")
+    with pytest.raises((OSError, ValueError), match=re.escape(str(path))):
+        _load_gate_history(str(path))

@@ -259,3 +259,29 @@ def test_rollup_expired_window_is_a_clean_error(spark, tmp_path):
     base.expire_snapshots(keep_last=2)
     with pytest.raises(ValueError, match="re-seed|not fully retained"):
         ru.refresh(spark)
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_rollup_refresh_releases_changed_keys(spark, tmp_path, monkeypatch):
+    """The changed-key set a refresh caches is released when the
+    refresh returns, and when it raises."""
+    base = mk_base(str(tmp_path / "base"))
+    ru = IncrementalRollup.create(
+        spark, str(tmp_path / "roll"), base, dims=["kind"], sums=["value"])
+    before = _persisted_rdds(spark)
+    base.merge(spark, batch(spark, [("a", "x", 1.0, "I", 1)]), batch_id=0)
+    ru.refresh(spark)
+    assert _persisted_rdds(spark) == before
+    assert_current(spark, ru)
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    base.merge(spark, batch(spark, [("b", "y", 2.0, "I", 2)]), batch_id=1)
+    monkeypatch.setattr(ru.table, "merge", fail)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        ru.refresh(spark)
+    assert _persisted_rdds(spark) == before

@@ -38,13 +38,18 @@ _HISTORY_PATH = _os.path.join(_os.path.dirname(_os.path.abspath(__file__)),
                               "gate_history.json")
 
 
-def _load_gate_history() -> dict:
+def _load_gate_history(path: str = _HISTORY_PATH) -> dict[str, int]:
+    """The committed map; a missing or malformed file raises, naming
+    it, rather than silently collapsing the rotation to name order."""
     try:
-        with open(_HISTORY_PATH, "r", encoding="utf-8") as fh:
+        with open(path, "r", encoding="utf-8") as fh:
             hist = _json.load(fh)
-        return {str(k): int(v) for k, v in hist.items()}
-    except (OSError, ValueError):
-        return {}
+    except ValueError as e:
+        raise ValueError(f"{path} is not JSON: {e}") from e
+    if not isinstance(hist, dict) or any(
+            isinstance(v, bool) or not isinstance(v, int) for v in hist.values()):
+        raise ValueError(f"{path} must map query names to integer rounds")
+    return hist
 
 
 GATE_HISTORY = _load_gate_history()

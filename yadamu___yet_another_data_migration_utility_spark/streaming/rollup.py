@@ -236,90 +236,93 @@ class IncrementalRollup:
         kcols = [key] if isinstance(key, str) else list(key)
         nb = self.base.manifest()["bucket_count"]
         ch = self.base.read_changes(spark, cur, until)
-        # materialize the changed-key set ONCE: it feeds the touched-
-        # bucket probe plus BOTH image reads' semi-joins -- without the
-        # checkpoint the window's change scan recomputes three times
-        # per refresh. O(changed keys) rows, the quantity incremental
-        # maintenance is already bounded by.
-        keys = ch.select(*kcols).distinct().localCheckpoint(eager=True)
-        touched = [
-            r["_b"]
-            for r in keys.select(_bucket_expr(key, nb).alias("_b"))
-            .distinct().collect()
-        ]
+        # cache the changed-key set ONCE: it feeds the touched-bucket
+        # probe plus BOTH image reads' semi-joins -- without it the
+        # window's change scan recomputes three times per refresh.
+        # O(changed keys) rows, the quantity incremental maintenance is
+        # already bounded by; released however the refresh ends.
+        keys = ch.select(*kcols).distinct().persist()
+        try:
+            touched = [
+                r["_b"]
+                for r in keys.select(_bucket_expr(key, nb).alias("_b"))
+                .distinct().collect()
+            ]
 
-        if touched:
-            pre = (
-                self.base.read(spark, version=cur, buckets=touched)
-                .join(keys, kcols, "left_semi")
-            )
-            post = (
-                self.base.read(spark, version=until, buckets=touched)
-                .join(keys, kcols, "left_semi")
-            )
-            delta = (
-                _contrib(pre, self.dims, self.sums, -1)
-                .unionByName(_contrib(post, self.dims, self.sums, +1))
-                .groupBy(*self.dims)
-                .agg(
-                    F.sum(_CNT_COL).cast("long").alias(_CNT_COL),
-                    *[F.sum(_sum_col(c)).cast(_SUM_ACC).alias(_sum_col(c))
-                      for c in self.sums],
+            if touched:
+                pre = (
+                    self.base.read(spark, version=cur, buckets=touched)
+                    .join(keys, kcols, "left_semi")
                 )
-                .withColumn(_KEY_COL, _dim_key(self.dims))
-            )
-            # prune the current rollup to touched groups, then combine;
-            # read AT the pinned version (see _pinned: a live-head read
-            # races with concurrent refreshes)
-            cur_groups = self.table.read(
-                spark, version=v_pin, public=True
-            ).join(
-                F.broadcast(delta.select(_KEY_COL)), _KEY_COL, "left_semi"
-            )
-            d = delta.select(
-                F.col(_KEY_COL),
-                *[F.col(c).alias(f"_d_{c}") for c in self.dims],
-                F.col(_CNT_COL).alias("_dn"),
-                *[F.col(_sum_col(c)).alias(f"_ds_{c}") for c in self.sums],
-            )
-            merged = cur_groups.join(d, _KEY_COL, "full_outer").select(
-                F.col(_KEY_COL),
-                *[F.coalesce(F.col(f"_d_{c}"), F.col(c)).alias(c)
-                  for c in self.dims],
-                (F.coalesce(F.col(_CNT_COL), F.lit(0))
-                 + F.coalesce(F.col("_dn"), F.lit(0)))
-                .cast("long").alias(_CNT_COL),
-                *[
-                    (F.coalesce(F.col(_sum_col(c)),
-                                F.lit(0).cast(_SUM_ACC))
-                     + F.coalesce(F.col(f"_ds_{c}"),
-                                  F.lit(0).cast(_SUM_ACC)))
-                    .cast(_SUM_ACC).alias(_sum_col(c))
-                    for c in self.sums
-                ],
-            )
-            batch = merged.select(
-                "*",
-                F.when(F.col(_CNT_COL) == 0, "D").otherwise("U").alias("op"),
-                F.lit(until).cast("long").alias("lsn"),
-            )
-        else:
-            # nothing changed in the window (skip/no-op commits): merge
-            # an empty batch purely to fence the window and advance the
-            # cursor -- otherwise every later refresh re-walks it.
-            schema = T.StructType.fromJson(self.table.manifest()["schema"])
-            batch = (
-                spark.createDataFrame([], schema)
-                .drop("_lsn")
-                .withColumn("op", F.lit("U"))
-                .withColumn("lsn", F.lit(until).cast("long"))
-            )
+                post = (
+                    self.base.read(spark, version=until, buckets=touched)
+                    .join(keys, kcols, "left_semi")
+                )
+                delta = (
+                    _contrib(pre, self.dims, self.sums, -1)
+                    .unionByName(_contrib(post, self.dims, self.sums, +1))
+                    .groupBy(*self.dims)
+                    .agg(
+                        F.sum(_CNT_COL).cast("long").alias(_CNT_COL),
+                        *[F.sum(_sum_col(c)).cast(_SUM_ACC).alias(_sum_col(c))
+                          for c in self.sums],
+                    )
+                    .withColumn(_KEY_COL, _dim_key(self.dims))
+                )
+                # prune the current rollup to touched groups, then combine;
+                # read AT the pinned version (see _pinned: a live-head read
+                # races with concurrent refreshes)
+                cur_groups = self.table.read(
+                    spark, version=v_pin, public=True
+                ).join(
+                    F.broadcast(delta.select(_KEY_COL)), _KEY_COL, "left_semi"
+                )
+                d = delta.select(
+                    F.col(_KEY_COL),
+                    *[F.col(c).alias(f"_d_{c}") for c in self.dims],
+                    F.col(_CNT_COL).alias("_dn"),
+                    *[F.col(_sum_col(c)).alias(f"_ds_{c}") for c in self.sums],
+                )
+                merged = cur_groups.join(d, _KEY_COL, "full_outer").select(
+                    F.col(_KEY_COL),
+                    *[F.coalesce(F.col(f"_d_{c}"), F.col(c)).alias(c)
+                      for c in self.dims],
+                    (F.coalesce(F.col(_CNT_COL), F.lit(0))
+                     + F.coalesce(F.col("_dn"), F.lit(0)))
+                    .cast("long").alias(_CNT_COL),
+                    *[
+                        (F.coalesce(F.col(_sum_col(c)),
+                                    F.lit(0).cast(_SUM_ACC))
+                         + F.coalesce(F.col(f"_ds_{c}"),
+                                      F.lit(0).cast(_SUM_ACC)))
+                        .cast(_SUM_ACC).alias(_sum_col(c))
+                        for c in self.sums
+                    ],
+                )
+                batch = merged.select(
+                    "*",
+                    F.when(F.col(_CNT_COL) == 0, "D").otherwise("U").alias("op"),
+                    F.lit(until).cast("long").alias("lsn"),
+                )
+            else:
+                # nothing changed in the window (skip/no-op commits): merge
+                # an empty batch purely to fence the window and advance the
+                # cursor -- otherwise every later refresh re-walks it.
+                schema = T.StructType.fromJson(self.table.manifest()["schema"])
+                batch = (
+                    spark.createDataFrame([], schema)
+                    .drop("_lsn")
+                    .withColumn("op", F.lit("U"))
+                    .withColumn("lsn", F.lit(until).cast("long"))
+                )
 
-        self.table.merge(
-            spark, batch, batch_id=until,
-            extra_audit={"base_since": cur, "base_until": until,
-                         "rollup_dims": self.dims},
-        )
+            self.table.merge(
+                spark, batch, batch_id=until,
+                extra_audit={"base_since": cur, "base_until": until,
+                             "rollup_dims": self.dims},
+            )
+        finally:
+            keys.unpersist()
         return until
 
     # ------------------------------------------------------------------
